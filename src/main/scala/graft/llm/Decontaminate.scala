@@ -229,10 +229,8 @@ object Decontaminate {
     // the same pinned blocks — overlap them (guide §2.6); the bitmap is
     // only consumed by the meta publish below, which awaits it, so the
     // crash-atomic publish order (tables first, meta LAST) is unchanged
-    val bfF = scala.concurrent.Future {
-      org.apache.spark.sql.SparkSession.setActiveSession(spark)
-      buildBloom(benchNg, fpp).orNull
-    }(graft.sink.IceTableWriter.sideJobEc)
+    val bfF = graft.sink.IceTableWriter.sideJob(spark, graft.sink.IceTableWriter.sideJobEc)(
+      buildBloom(benchNg, fpp).orNull)
     // crash-atomic publish: the exact index stages under a fresh
     // generation dir and the meta row (which carries the Bloom bitmap AND
     // the generation pointer) commits LAST — a crash mid-rebuild can

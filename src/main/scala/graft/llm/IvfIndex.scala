@@ -469,10 +469,8 @@ object IvfIndex {
     // range-splits a skewed cell, same one-cell-per-file clustering.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    def sideWrite(body: => Unit): Future[Unit] = Future {
-      org.apache.spark.sql.SparkSession.setActiveSession(spark)
-      body
-    }(graft.sink.IceTableWriter.sideJobEc)
+    def sideWrite(body: => Unit): Future[Unit] =
+      graft.sink.IceTableWriter.sideJob(spark, graft.sink.IceTableWriter.sideJobEc)(body)
     if (nCells <= twoLevelGate) {
       val cents = Similarity.trainCentroids(c, nCells, kmeansIters, dim)
       val geomF = sideWrite {

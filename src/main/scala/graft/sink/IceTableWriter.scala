@@ -230,15 +230,9 @@ object IceTableWriter {
     // not Ingest's K10 commit pool: in multi-table mode writeTable already
     // runs ON that pool, and a nested Await inside a fixed pool's own
     // thread can exhaust it (classic pool-in-pool deadlock).
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
-    val delF = Future {
-      // pool threads carry no active-session thread-local; anything
-      // below that resolves the session via getActiveSession must see
-      // the frame's own session, not another thread's
-      org.apache.spark.sql.SparkSession.setActiveSession(deleteKeysDf.sparkSession)
-      writeDeleteFiles(deleteKeysDf, table)
-    }(sideJobEc)
+    val delF = sideJob(deleteKeysDf.sparkSession, sideJobEc)(writeDeleteFiles(deleteKeysDf, table))
     val dataFiles =
       try writeFiles(dataDf, table, maxRecordsPerFile)
       catch {
@@ -267,6 +261,35 @@ object IceTableWriter {
         t.setDaemon(true)
         t
       }))
+
+  /** Local properties that make a job part of the submitting thread's
+    * work: its job group and interrupt-on-cancel flag (so cancelling the
+    * group, as `StreamingQuery.stop()` does, reaches the job), its
+    * description, and the streaming query and batch ids. The SQL execution
+    * id and the call site are deliberately left out: each side job opens
+    * its own execution and has its own call site.
+    */
+  private val SideJobProps = Seq("spark.jobGroup.id", "spark.job.interruptOnCancel",
+    "spark.job.description", "sql.streaming.queryId", "streaming.sql.batchId")
+
+  /** Run `body` on the pool `ec` as part of the calling thread's work: the
+    * pool thread gets the caller's active session and [[SideJobProps]] for
+    * the duration of `body`. Pool threads are reused across callers, so
+    * the properties are set per call (an absent one is cleared) and the
+    * thread's own values restored after.
+    */
+  private[graft] def sideJob[T](spark: SparkSession, ec: scala.concurrent.ExecutionContext)(
+      body: => T): scala.concurrent.Future[T] = {
+    val sc = spark.sparkContext
+    val caller = SideJobProps.map(k => k -> sc.getLocalProperty(k))
+    scala.concurrent.Future {
+      SparkSession.setActiveSession(spark)
+      val own = SideJobProps.map(k => k -> sc.getLocalProperty(k))
+      caller.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try body
+      finally own.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }(ec)
+  }
 
   // ---- internals ------------------------------------------------------
 

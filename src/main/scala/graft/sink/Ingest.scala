@@ -2,6 +2,7 @@ package graft.sink
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 import graft.config.{EngineConfig, TableConfig}
@@ -78,7 +79,12 @@ object Ingest {
     // would re-scan the source (and re-run the SMT chain) per trigger.
     val dynamic = config.dynamicRouting && config.routeField.isDefined
     if (dynamic) filtered.persist()
-    val routed = Routing.route(filtered, config)
+    val discovered = Routing.route(filtered, config)
+    // Size each routed write by the batch's bytes, not its partition
+    // count. Dynamic only: static-route and single-table caches fill
+    // during the writes, so coalescing would serialize the SMT chain.
+    val tasks = if (dynamic) writeTasks(spark, filtered) else None
+    val routed = tasks.fold(discovered)(k => discovered.map { case (t, d) => t -> d.coalesce(k) })
     val multi = routed.size > 1 || dynamic
     val cached = multi || config.deadLetterEnabled
     if (cached && !dynamic) filtered.persist()
@@ -95,7 +101,7 @@ object Ingest {
         import scala.concurrent.duration.Duration
         implicit val ec: scala.concurrent.ExecutionContext = commitEc(config.commitThreads)
         val fs = routed.map { case (tconf, tdf) =>
-          Future(TableResult(tconf.name,
+          IceTableWriter.sideJob(spark, ec)(TableResult(tconf.name,
             writeTable(spark, tdf, batchId, tconf, config, bookkeeping)))
         }
         Await.result(Future.sequence(fs), Duration.Inf)
@@ -103,6 +109,25 @@ object Ingest {
     } finally {
       if (cached) { filtered.unpersist(); () }
     }
+  }
+
+  /** Write tasks for each routed slice of the persisted, materialized
+    * batch `cached`: its in-memory bytes over the AQE advisory partition
+    * size (the budget the partitioned path's rebalance already sizes write
+    * tasks by), read from the cache's own statistics, so no extra job.
+    * None (write as is) when the cache is not materialized or the count
+    * would not be below the cache's partition count. */
+  private def writeTasks(spark: SparkSession, cached: DataFrame): Option[Int] = {
+    val cacheManager = spark.sharedState.cacheManager
+    cacheManager.lookupCachedData(cached.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation)
+      .filter(_.cacheBuilder.isCachedColumnBuffersLoaded)
+      .flatMap { rel =>
+        val advisory = math.max(1L,
+          spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+        val k = ((rel.computeStats().sizeInBytes + advisory - 1) / advisory).max(1)
+        if (k < rel.cacheBuilder.cachedColumnBuffers.getNumPartitions) Some(k.toInt) else None
+      }
   }
 
   /** K10 — shared driver-side pools for multi-table parallel commits
@@ -248,10 +273,8 @@ object Ingest {
         // as the old sequential order: whichever commit lands first, a
         // crashed batch replays under the same batchId and both tables'
         // idempotence guards skip what already committed.
-        dlqF = Some(scala.concurrent.Future {
-          org.apache.spark.sql.SparkSession.setActiveSession(spark)
-          IceTableWriter.append(spark, dlqRows, dlqTable, batchId)
-        }(IceTableWriter.sideJobEc))
+        dlqF = Some(IceTableWriter.sideJob(spark, IceTableWriter.sideJobEc)(
+          IceTableWriter.append(spark, dlqRows, dlqTable, batchId)))
         ok
       }
     def awaitDlq(): Unit = dlqF.foreach { f =>

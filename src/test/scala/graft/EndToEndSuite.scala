@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -382,5 +384,62 @@ class EndToEndSuite extends AnyFunSuite {
     val replay = Ingest.run(spark, batch, 0L, cfg)
     assert(replay.forall(_.commit.isEmpty), "replayed batch must commit nowhere")
     assert(IceTable.load(s"$wh/t3").read(spark).count() === 5L)
+  }
+
+  test("K10 dynamic routing sizes each table's write by the batch's bytes: " +
+    "1 task and 1 file per write at the default advisory size, the source's 4 at a tiny one") {
+    // kafka-shaped (offsets + VTTS ride the write), 4 source partitions,
+    // two routes per partition; batch 1 sends qty as a string, and every
+    // 25th row's value is not a number, so both tables dead-letter rows
+    def batch(b: Int) = spark.range(b * 400L, b * 400L + 400, 1, 4).select(
+      lit("t").as("topic"), (col("id") % 4).cast("int").as("partition"),
+      col("id").as("offset"), timestamp_micros(lit(1700000000000000L) + col("id")).as("timestamp"),
+      concat(lit("r"), (col("id") % 2).cast("string")).as("route"),
+      (if (b == 0) col("id") else when(col("id") % 25 === 7, lit("x")).otherwise(col("id").cast("string")))
+        .as("qty"))
+    val writeTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.name.startsWith("save at IceTableWriter")) writeTasks.add(e.stageInfo.numTasks)
+    }
+    val tables = Seq("r0", "r1", "r0__dlq", "r1__dlq")
+    def ingest(advisory: Option[String]) = {
+      val wh = TestSpark.freshDir("e2e-sized")
+      val cfg = EngineConfig(warehouse = wh, routeField = Some("route"), dynamicRouting = true,
+        autoCreate = true, deadLetterEnabled = true)
+      val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+      advisory.foreach(spark.conf.set(key, _))
+      try {
+        Ingest.run(spark, batch(0), 0L, cfg)
+        writeTasks.clear()
+        spark.sparkContext.addSparkListener(listener)
+        try Ingest.run(spark, batch(1), 1L, cfg)
+        finally {
+          // listener events are async: settle = no new write stage for 500 ms
+          var last = -1
+          while (writeTasks.size != last) { last = writeTasks.size; Thread.sleep(500) }
+          spark.sparkContext.removeSparkListener(listener)
+        }
+      } finally if (advisory.isDefined) spark.conf.unset(key)
+      val last = tables.map(n => n -> IceTable.load(s"$wh/$n").log.commits().last).toMap
+      def rows(n: String, cols: String*) =
+        IceTable.load(s"$wh/$n").read(spark).select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+      val content = Seq("r0", "r1").map(rows(_, "offset", "topic", "partition", "timestamp", "route", "qty")) ++
+        Seq("r0__dlq", "r1__dlq").map(rows(_, "record", "reason"))
+      (writeTasks.asScala.toSeq, last, content)
+    }
+    val (sized, sizedCommits, sizedContent) = ingest(None)
+    val (wide, wideCommits, wideContent) = ingest(Some("4"))
+    assert(sized === Seq.fill(4)(1), "main + dead-letter write of 2 tables, 1 task each")
+    assert(wide === Seq.fill(4)(4), "a batch wider than the advisory size keeps its 4 partitions")
+    tables.foreach(n => assert(sizedCommits(n).dataFiles.size === 1, s"$n commit files"))
+    assert(sizedContent === wideContent)
+    assert(sizedContent(2).nonEmpty && sizedContent(3).nonEmpty, "both tables dead-lettered rows")
+    tables.foreach { n =>
+      assert(sizedCommits(n).offsets === wideCommits(n).offsets, s"$n offsets")
+      assert(sizedCommits(n).vtts === wideCommits(n).vtts, s"$n vtts")
+    }
+    assert(sizedCommits("r0").offsets === (0 until 4).map(p => s"t-$p" -> (797L + p)).toMap)
+    assert(sizedCommits("r0").vtts === Some(1700000000000000L + 796L))
   }
 }

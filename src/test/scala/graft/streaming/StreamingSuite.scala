@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +11,34 @@ import graft.fs.ControlFs
 import graft.table.IceTable
 
 case class Ev(event_id: Long, user_id: Long, event_type: String, value: Double)
+
+/** Holds every write task's data file under a table named `slow` (or its
+  * dead-letter table) at create until [[BlockingWriteTestFs.release]]; a
+  * task interrupted by its job's cancellation stops waiting. */
+class BlockingWriteTestFs
+    extends org.apache.hadoop.fs.FilterFileSystem(new graft.SchemedRawLocalFs("blockwritex")) {
+  override def getScheme: String = "blockwritex"
+  override def getUri: java.net.URI = java.net.URI.create("blockwritex:///")
+  override def create(
+      f: org.apache.hadoop.fs.Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission,
+      overwrite: Boolean,
+      bufferSize: Int,
+      replication: Short,
+      blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    if (f.getName.startsWith("part-") && f.toUri.getPath.matches(".*/slow(__dlq)?/data/.*")) {
+      BlockingWriteTestFs.entered.countDown()
+      BlockingWriteTestFs.release.await()
+    }
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object BlockingWriteTestFs {
+  val entered = new java.util.concurrent.CountDownLatch(1)
+  val release = new java.util.concurrent.CountDownLatch(1)
+}
 
 /** K1-K12 streaming shell: micro-batches from a MemoryStream drive the
   * same Ingest pipeline; each trigger = one commit (the reference's
@@ -69,6 +99,55 @@ class StreamingSuite extends AnyFunSuite {
     // batch 1 committed to both tables; batch 2 only to click
     assert(click.log.commits().map(_.batchId) === Seq(0L, 1L))
     assert(view.log.commits().map(_.batchId) === Seq(0L))
+  }
+
+  test("stopping a query cancels the routed writes its trigger started") {
+    // the per-table writes run on the commit pool and the dead-letter
+    // writes on the side-job pool; they must carry the trigger's job
+    // group, or StreamingQuery.stop() cannot cancel them
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val sc = spark.sparkContext
+    sc.hadoopConfiguration.set("fs.blockwritex.impl", classOf[BlockingWriteTestFs].getName)
+    def config(wh: String) = EngineConfig(warehouse = wh, routeField = Some("event_type"),
+      dynamicRouting = true, autoCreate = true, deadLetterEnabled = true, commitThreads = 3)
+    // pool threads are created by whichever thread first submits to them
+    // and inherit its local properties; start them from this thread, which
+    // has no job group, so the query's group can only come from the
+    // submission itself
+    graft.sink.Ingest.run(spark, Seq(Ev(1, 1, "a", 0), Ev(2, 2, "b", 0), Ev(3, 3, "c", 0)).toDF(),
+      0L, config(TestSpark.freshDir("stream-stop-warm")))
+    val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        groups.put(e.jobId, String.valueOf(e.properties.getProperty("spark.jobGroup.id"))); ()
+      }
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        ended.add(e.jobId); ()
+      }
+    }
+    val ms = MemoryStream[Ev]
+    val q = IngestStream.start(ms.toDF(),
+      config("blockwritex:" + TestSpark.freshDir("stream-stop")),
+      TestSpark.freshDir("stream-stop-ckpt"), triggerMs = Some(50))
+    sc.addSparkListener(listener)
+    try {
+      ms.addData(Ev(1, 10, "slow", 1.0), Ev(2, 11, "fast", 2.0))
+      assert(BlockingWriteTestFs.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the routed write never reached its data file")
+      q.stop()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def running = groups.keySet.asScala.filterNot(ended.contains)
+      while (running.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(running.isEmpty, s"jobs still active 30 s after stop: $running")
+      assert(groups.values.asScala.toSet === Set(q.runId.toString),
+        "every job of the trigger ran in the query's job group")
+    } finally {
+      BlockingWriteTestFs.release.countDown()
+      q.stop()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("streaming incremental dedup: batches dedup against corpus + earlier batches, exactly-once") {

@@ -1127,6 +1127,23 @@ class IceTableSuite extends AnyFunSuite {
     assert(t.log.commits().size === 2)
   }
 
+  test("merge evaluates its source once: a non-deterministic source's delete keys match its rows") {
+    val dir = TestSpark.freshDir("t_merge_pin")
+    val t = IceTable.create(dir, schema, TableMeta(idColumns = Seq("id")))
+    // every evaluation of the source draws fresh keys
+    val freshKey = udf(() => java.util.concurrent.ThreadLocalRandom.current().nextLong())
+      .asNondeterministic()
+    val source = spark.range(0, 50, 1, 4)
+      .select(freshKey().as("id"), lit("n").as("name"), col("id").cast("double").as("v"))
+    val c = t.merge(spark, source, batchId = 1L).get
+    def keys(files: Seq[FileEntry]) =
+      spark.read.parquet(files.map(_.path): _*).select("id").as[Long].collect().toSet
+    val written = keys(c.dataFiles)
+    assert(written.size === 50)
+    assert(keys(c.deleteFiles) === written, "delete keys come from the same evaluation as the rows")
+    assert(t.read(spark).select("id").as[Long].collect().toSet === written)
+  }
+
   test("readChanges emits un-netted insert/delete events in commit order; rewrites skipped") {
     val dir = TestSpark.freshDir("t9c")
     val t = IceTable.create(dir, schema, TableMeta(idColumns = Seq("id")))
